@@ -35,7 +35,8 @@ from geobuf_cpp_spark.functions.cells import (
 from geobuf_cpp_spark.functions.sql_codec import sql_roundtrip
 from geobuf_cpp_spark.operators.curation import sql_knuth_hash
 from geobuf_cpp_spark.plans.partitioning import spread
-from geobuf_cpp_spark.session import ship_package
+from geobuf_cpp_spark.session import _MEMO as _SHARED_MEMO  # read by perfbench
+from geobuf_cpp_spark.session import session_memo, ship_package
 from geobuf_cpp_spark.sources import points as P
 
 from geobuf_cpp_spark.operators.segments import sql_segments_intersect
@@ -247,32 +248,12 @@ def _prep(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         table_df(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-# Sibling gates share their expensive derived inputs (the CMS matrix, the
-# KMV sketch, the Bloom bit set, the co-occurrence edge list): the first
-# consumer in a session builds + persists, later ones reuse — identical
-# results, one corpus scan instead of two per pair. Keyed weakly by
-# session so a stopped session's cache evicts with it.
-import weakref as _weakref
-
-_SHARED_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-def _shared_df(spark: SparkSession, sf_dir: str, key: str, build,
-               how: str = "persist"):
-    per_session = _SHARED_MEMO.setdefault(spark, {})
-    df = per_session.get((sf_dir, key))
-    if df is None:
-        built = build()
-        # "ckpt": lazy localCheckpoint instead of persist — an
-        # InMemoryRelation is an AQE re-planning barrier and carries
-        # defaultSizeInBytes stats until materialized, which can flip
-        # every join above it to sort-merge on the cold pass (measured:
-        # prefix_jaccard 4.0s -> 23.7s cold under persist); a
-        # checkpointed RDD keeps real sizes and partitioning.
-        df = (built.localCheckpoint(eager=False) if how == "ckpt"
-              else built.persist())
-        per_session[(sf_dir, key)] = df
-    return df
+def _shared_df(spark: SparkSession, sf_dir: str, key: str, build):
+    """A derived frame that sibling gates share (the CMS matrix, the KMV
+    sketch, the co-occurrence edge list, ...): the first consumer in a
+    session builds and persists it, later ones reuse it — identical
+    results, one corpus scan instead of one per gate."""
+    return session_memo(spark, (sf_dir, key), lambda: build().persist())
 
 
 # ---------------------------------------------------------------------------
@@ -1442,18 +1423,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup edges (min-label propagation, O(diameter) rounds) — gated
     against a DuckDB RECURSIVE CTE computing the transitive closure's min
     reachable id. An ITERATIVE algorithm with a full value oracle."""
-    from geobuf_cpp_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
+    from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    # same edge list the ngram_jaccard gate IS — build + persist once
-    # per session (the _shared_seg_pairs discipline for the text graph)
-    pairs = _shared_df(
-        spark, sf_dir, "ngram_pairs",
-        lambda: ngram_jaccard_pairs(
-            docs, threshold=MINHASH_THRESHOLD,
-            ds=_shared_shingles(spark, sf_dir)))
-    return dedup_clusters(docs, pairs)
+    # the edge list IS the ngram_jaccard gate's shared frame
+    pairs = q_ngram_jaccard(spark, sf_dir)
+    return dedup_clusters(spark.table("documents"), pairs)
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1786,17 +1760,24 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates consume it — ngram_jaccard / prefix_jaccard / containment /
     dedup_clusters — one tokenize+explode+distinct corpus scan instead
     of four (the sketch-family sharing discipline). Dictionary-encoded
-    (`shingle_sid_sets`): the shingle key is a dense INT id in
+    (`shingle_sid_sets`): the shingle key is a dense BIGINT id in
     (df, shingle) order — a bijection, so intersection counts and set
-    sizes are untouched, while every downstream join shuffles 4-byte
-    ints instead of ~25-byte strings and the prefix filter reads its
-    rarest-first order straight off the id (guide §2.3)."""
+    sizes are untouched, while every downstream join shuffles 8-byte
+    longs instead of ~25-byte strings and the prefix filter reads its
+    rarest-first order straight off the id (guide §2.3).
+
+    A lazy localCheckpoint, not persist: an InMemoryRelation is an AQE
+    re-planning barrier and carries defaultSizeInBytes stats until
+    materialized, which can flip every join above it to sort-merge on
+    the cold pass (measured: prefix_jaccard 4.0s -> 23.7s cold under
+    persist); a checkpointed RDD keeps real sizes and partitioning."""
     from geobuf_cpp_spark.operators.dedup import shingle_sid_sets
 
     _prep(spark, sf_dir, "documents")
-    return _shared_df(
-        spark, sf_dir, "shingles",
-        lambda: shingle_sid_sets(spark.table("documents")), how="ckpt")
+    return session_memo(
+        spark, (sf_dir, "shingles"),
+        lambda: shingle_sid_sets(spark.table("documents")).localCheckpoint(
+            eager=False))
 
 
 def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1880,13 +1861,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale story vs the oracle's brute force: DuckDB compares
     O(n²) pairs; the Spark plan shuffles each side once on the
     radius-sized cell key and only compares within 3x3 neighborhoods.
+    The pair set is shared: `ripley_k` re-aggregates it.
     """
-    return _range_pairs(spark, sf_dir)
-
-
-def _range_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared radius-100 pair set (session memo): `range_join` IS this
-    set and `ripley_k` re-aggregates it — one blocked join, two gates."""
     from geobuf_cpp_spark.operators.range_join import range_self_join
 
     _prep(spark, sf_dir, "orders")
@@ -1904,7 +1880,7 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolves K(r) = area*2*pairs/n^2 in floats). Completes the spatial
     -stats family: global Moran's I, local Gi*, now the multi-scale
     clustering curve."""
-    pairs = _range_pairs(spark, sf_dir)
+    pairs = q_range_join(spark, sf_dir)
     pts = spark.sql(P.IPOINTS_SELECT)
     tot = pts.agg(F.count("*").cast("long").alias("n_points"))
     # coalesce: a radius with ZERO pairs (sparse SFs) must report 0,
@@ -1975,18 +1951,11 @@ def q_segment_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, exact integer CLRS predicate, each pair emitted once
     from the smallest shared cell (no DISTINCT). Oracle: brute-force
     O(n^2) with the IDENTICAL predicate text plus implied bbox-overlap
-    band conditions for IEJoin pruning."""
-    _prep(spark, sf_dir, "orders")
-    return _shared_seg_pairs(spark, sf_dir)
-
-
-def _shared_seg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crossing-pair set feeds BOTH segment_crossings (directly) and
-    segment_components (as the CC edge list) — build + persist once per
-    session, like the sketch family's shared intermediates (cms_sketch
-    went 1.51s -> 0.11s under the same memo)."""
+    band conditions for IEJoin pruning. The pair set is shared: it is
+    the edge list of segment_components and network_hops."""
     from geobuf_cpp_spark.operators.segments import segment_intersections
 
+    _prep(spark, sf_dir, "orders")
     return _shared_df(
         spark, sf_dir, "seg_pairs",
         lambda: segment_intersections(spark.sql(P.ISEGS_SELECT), SEG_CELL))
@@ -2003,9 +1972,8 @@ def q_segment_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure over the banded intersect pairs."""
     from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
-    _prep(spark, sf_dir, "orders")
+    pairs = q_segment_crossings(spark, sf_dir)
     segs = spark.sql(P.ISEGS_SELECT)
-    pairs = _shared_seg_pairs(spark, sf_dir)
     return dedup_clusters(
         segs.selectExpr("seg_id AS doc_id"), pairs
     ).withColumnRenamed("doc_id", "seg_id")
@@ -2023,9 +1991,8 @@ def q_network_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs taking min(depth) per node."""
     from geobuf_cpp_spark.operators.graph import bfs_hops
 
-    _prep(spark, sf_dir, "orders")
+    pairs = q_segment_crossings(spark, sf_dir)
     segs = spark.sql(P.ISEGS_SELECT)
-    pairs = _shared_seg_pairs(spark, sf_dir)
     return bfs_hops(
         pairs,
         segs.filter(F.col("seg_id") % BFS_SOURCE_MOD == 0)
@@ -2319,14 +2286,10 @@ def q_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CMS point queries for the exact top-N tokens: est = min over
     rows of the addressed counter — a deterministic function of the
     matrix, so it hash-gates exactly."""
-    from geobuf_cpp_spark.operators.sketches import (
-        cms_estimate,
-        count_min_sketch,
-    )
+    from geobuf_cpp_spark.operators.sketches import cms_estimate
 
-    _prep(spark, sf_dir, "documents")
+    sketch = q_cms_sketch(spark, sf_dir)
     docs = spark.table("documents")
-    sketch = _shared_df(spark, sf_dir, "cms", lambda: count_min_sketch(docs))
     top = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
@@ -2355,11 +2318,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k-1)*2^64/h_k matches DuckDB's hugeint integer division."""
     from geobuf_cpp_spark.operators.sketches import kmv_distinct
 
-    _prep(spark, sf_dir, "documents")
-    from geobuf_cpp_spark.operators.sketches import kmv_sketch
-
-    sketch = _shared_df(spark, sf_dir, "kmv",
-                        lambda: kmv_sketch(spark.table("documents")))
+    sketch = q_kmv_sketch(spark, sf_dir)
     return kmv_distinct(spark.table("documents"), sketch=sketch)
 
 
@@ -2369,13 +2328,9 @@ def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract and a binary-search bitlength cascade — the full register
     table hash-gates against DuckDB recomputing it from
     md5_number_lower."""
-    _prep(spark, sf_dir, "documents")
-    return _shared_hll(spark, sf_dir)
-
-
-def _shared_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import hll_registers
 
+    _prep(spark, sf_dir, "documents")
     return _shared_df(spark, sf_dir, "hll",
                       lambda: hll_registers(spark.table("documents")))
 
@@ -2390,8 +2345,7 @@ def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 hex — completing HLL the way kmv_distinct completed KMV."""
     from geobuf_cpp_spark.operators.sketches import hll_estimate_parts
 
-    _prep(spark, sf_dir, "documents")
-    return hll_estimate_parts(_shared_hll(spark, sf_dir))
+    return hll_estimate_parts(q_hll_registers(spark, sf_dir))
 
 
 def q_ams_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2421,12 +2375,10 @@ def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     second frequency moment, both exact integers (median of 9 via
     sort-limit-max, no global window; the two 1-row frames meet on a
     constant-key equi-join, not a cartesian)."""
-    from geobuf_cpp_spark.operators.sketches import ams_f2, ams_sketch
+    from geobuf_cpp_spark.operators.sketches import ams_f2
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    sk = _shared_df(spark, sf_dir, "ams", lambda: ams_sketch(docs))
-    return ams_f2(docs, sketch=sk)
+    sk = q_ams_sketch(spark, sf_dir)
+    return ams_f2(spark.table("documents"), sketch=sk)
 
 
 QSKETCH_VALUE = "CAST(round(value * 100) AS BIGINT)"   # exact cents
@@ -2498,14 +2450,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge fan-out m^(3/2)-bounded (operators/graph.py); the oracle
     recounts with a canonical x<y<z triple self-join."""
     from geobuf_cpp_spark.operators.graph import triangle_counts
-    from geobuf_cpp_spark.operators.textstats import term_cooccurrence
 
-    _prep(spark, sf_dir, "documents")
-    cooccur = _shared_df(
-        spark, sf_dir, "cooccur",
-        lambda: term_cooccurrence(spark.table("documents")))
     edges = (
-        cooccur
+        q_term_cooccur(spark, sf_dir)
         .filter(F.col("pair_docs") >= TRI_EDGE_MIN_DOCS)
         .select(F.col("term_a").alias("id_a"), F.col("term_b").alias("id_b"))
     )
@@ -2538,11 +2485,10 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (the decontamination-prefilter shape: held-out side probes a
     kilobyte bit table instead of anti-joining the corpus). False
     positives are deterministic, so the gate hash-matches them too."""
-    from geobuf_cpp_spark.operators.sketches import bloom_build, bloom_probe
+    from geobuf_cpp_spark.operators.sketches import bloom_probe
 
-    _prep(spark, sf_dir, "documents", "part")
-    bloom = _shared_df(spark, sf_dir, "bloom",
-                       lambda: bloom_build(spark.table("documents")))
+    bloom = q_bloom_bits(spark, sf_dir)
+    _prep(spark, sf_dir, "part")
     probe = (
         spark.table("part")
         .select(F.explode(F.split("p_name", " ")).alias("term"))

@@ -49,13 +49,29 @@ def polygon_coverings(admin_pdf: pd.DataFrame, res: int,
     return pd.DataFrame(rows, columns=["admin_id", "cell"])
 
 
+def _geom_rings(geom) -> list[np.ndarray]:
+    return wire_rings(geom["type"], geom["dim"], geom["lengths"], geom["coords"])
+
+
 def _rings_by_admin(admin_pdf: pd.DataFrame) -> dict[int, list[np.ndarray]]:
     return {
-        int(admin_id): wire_rings(
-            geom["type"], geom["dim"], geom["lengths"], geom["coords"]
-        )
+        int(admin_id): _geom_rings(geom)
         for admin_id, geom in zip(admin_pdf["admin_id"], admin_pdf["geom"])
     }
+
+
+def _refine_mask(pdf: pd.DataFrame, lon_col: str, lat_col: str,
+                 rings_of) -> np.ndarray:
+    """Exact even-odd test of a candidate batch: one vectorized
+    ``pip_mask`` per admin_id group. ``rings_of(admin_id, row)`` gives
+    the polygon rings, ``row`` being the position of one of the group's
+    rows in ``pdf``."""
+    keep = np.zeros(len(pdf), dtype=bool)
+    px = pdf[lon_col].to_numpy(dtype=np.float64)
+    py = pdf[lat_col].to_numpy(dtype=np.float64)
+    for admin_id, idx in pdf.groupby("admin_id").indices.items():
+        keep[idx] = pip_mask(px[idx], py[idx], rings_of(admin_id, idx[0]))
+    return keep
 
 
 def pip_join_large(points_df, polygons_df, res: int = 8,
@@ -81,10 +97,6 @@ def pip_join_large(points_df, polygons_df, res: int = 8,
     the same polygon in several cover cells) are impossible: a point lies
     in exactly one cell at ``res``.
     """
-    from typing import Iterator
-
-    spark = points_df.sparkSession
-
     cover_schema = (
         "admin_id long, cell long, "
         "geom struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
@@ -110,19 +122,10 @@ def pip_join_large(points_df, polygons_df, res: int = 8,
     out_cols = [*point_keys, "admin_id"]
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.geometry import wire_rings
-
         for pdf in batches:
-            if pdf.empty:
-                yield pdf[out_cols]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon_col].to_numpy(dtype=np.float64)
-            py = pdf[lat_col].to_numpy(dtype=np.float64)
-            for admin_id, idx in pdf.groupby("admin_id").indices.items():
-                g = pdf["geom"].iloc[idx[0]]
-                rings = wire_rings(g["type"], g["dim"], g["lengths"], g["coords"])
-                keep[idx] = pip_mask(px[idx], py[idx], rings)
+            # the polygon geometry rides along on every candidate row
+            keep = _refine_mask(pdf, lon_col, lat_col,
+                                lambda _, row: _geom_rings(pdf["geom"].iloc[row]))
             yield pdf.loc[keep, out_cols]
 
     out_schema = ", ".join(
@@ -174,14 +177,8 @@ def pip_join(points_df, admin_pdf: pd.DataFrame, res: int = 8,
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon_col].to_numpy(dtype=np.float64)
-            py = pdf[lat_col].to_numpy(dtype=np.float64)
-            for admin_id, idx in pdf.groupby("admin_id").indices.items():
-                keep[idx] = pip_mask(px[idx], py[idx], rings[int(admin_id)])
+            keep = _refine_mask(pdf, lon_col, lat_col,
+                                lambda admin_id, _: rings[int(admin_id)])
             yield pdf[keep]
 
     return candidates.mapInPandas(refine, out_schema).drop("cell")

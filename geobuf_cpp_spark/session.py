@@ -38,6 +38,28 @@ def build_pkg_zip(zip_path: str | None = None) -> str:
     return zip_path
 
 
+# The engine's one per-session cache; see ``session_memo``.
+_MEMO: dict = {}
+
+
+def session_memo(spark: SparkSession, key, build):
+    """Return ``build()``, computed once per session and ``key``.
+
+    Holds what a session may reuse across queries: reader plans,
+    split-count probes, persisted shared frames and the shipped-package
+    marker. An entry lives as long as its session does. A session whose
+    SparkContext has stopped loses all of its entries at the next call
+    from any session, so its DataFrames, and through them the session
+    and its py4j handles, can be collected.
+    """
+    for stopped in [s for s in _MEMO if s.sparkContext._jsc is None]:
+        del _MEMO[stopped]
+    entries = _MEMO.setdefault(spark, {})
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
 def ship_package(spark: SparkSession) -> None:
     """Distribute this package to executors (the --py-files path).
 
@@ -46,10 +68,8 @@ def ship_package(spark: SparkSession) -> None:
     cluster via ``spark-submit --py-files engine.zip``, programmatically via
     ``addPyFile``. Idempotent per session.
     """
-    if getattr(spark, "_geobuf_pkg_shipped", False):
-        return
-    spark.sparkContext.addPyFile(build_pkg_zip())
-    spark._geobuf_pkg_shipped = True
+    session_memo(spark, "package",
+                 lambda: spark.sparkContext.addPyFile(build_pkg_zip()))
 
 
 def get_spark(

@@ -25,3 +25,37 @@ def test_oracles_are_nonempty_sql():
         assert not leftover, (
             f"{name}: unformatted placeholder {leftover and leftover.group()}"
         )
+
+
+# Results are signed in registry order and each gate is compared with its
+# oracle text, so edits to the q_* builders must leave both unchanged.
+QUERIES_ORDER_SHA256 = (
+    "e1c005144c79d36827f5228f9d1da87f66b25bb8600a3c4da1a822919014a04f")
+ORACLE_SQL_SHA256 = (
+    "d34e25eaeac682e5c5307d86859e2e15639a9e9c8bbe8101ddef77ce8fa88184")
+
+
+def _sha256(lines):
+    import hashlib
+
+    h = hashlib.sha256()
+    for line in lines:
+        h.update(line.encode())
+        h.update(b"\n")
+    return h.hexdigest()
+
+
+def test_queries_order_is_pinned():
+    import __spark_entry__ as E
+
+    names = list(E.queries())
+    assert len(names) == 183
+    assert _sha256(names) == QUERIES_ORDER_SHA256
+
+
+def test_oracle_sql_texts_are_pinned():
+    import __spark_entry__ as E
+
+    oracles = E.oracle_sql()
+    assert _sha256(f"{k}\0{oracles[k]}" for k in sorted(oracles)) == (
+        ORACLE_SQL_SHA256)

@@ -201,3 +201,11 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     d3 = str(tmp_path / "c")
     spark.createDataFrame([(3,)], "x long").write.parquet(f"{d3}/t.parquet")
     assert table_df(spark, d3, "t").collect()[0].x == 3
+
+
+def test_shingle_sid_is_bigint(spark):
+    """Shingle ids are BIGINT: an int id would wrap past 2^31 distinct
+    shingles and silently merge sets."""
+    from geobuf_cpp_spark.operators.dedup import shingle_sid_sets
+
+    assert dict(shingle_sid_sets(_docs(spark)).dtypes)["shingle"] == "bigint"
